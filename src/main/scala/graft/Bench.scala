@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are fully materialized through a noop sink
   * (not count()) so scans/projections can't be short-circuited by parquet
@@ -70,25 +68,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bounded-buffer typed aggregates (TopKAgg/MinKByAgg) group by
-      // corpus-sized keys: the 128-key default silently flips
-      // ObjectHashAggregate to sort-based, paying a map-side sort of
-      // the whole input (measured 2.7x on the pair summaries); buffers
-      // are <= k rows per group, so hash aggregation is safe
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the whole-stage-codegen class cache defaults to 100 entries — a
-      // registry of 200+ plans generates far more, so with the default
-      // every pass re-pays Janino compilation for every query (the same
-      // setting any production deployment running hundreds of distinct
-      // plans per executor lifetime would raise). Static conf: must be
-      // set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt, cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // one tiny action before timing: session init, parquet footer reader,
     // and noop-sink classloading otherwise land entirely on the first

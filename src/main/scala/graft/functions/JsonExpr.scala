@@ -24,13 +24,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `{"dummy":…,"imdbMovieId":…,"location":…,"matchedCompanyName":…,
   *      "movieReleaseYear":…,"personMappedRole":…,"region":…,"seq":…}`;
   *  - docs joined by "," (the surrounding `[`/`]` stay in the caller);
+  *    a null doc or a doc whose `rels` is null is skipped;
   *  - string fields escaped with exactly json.dumps' default repertoire
   *    (backslash, quote, \b \f \n \r \t, \u00XX for remaining control
   *    chars < 0x20; non-ASCII passes through raw — the fixtures are
   *    built with ensure_ascii=False);
-  *  - null fields render as JSON null; booleans as true/false; integral
-  *    fields via Long.toString — each the exact value of the Column
-  *    form's `coalesce(cast(c as string), 'null')`.
+  *  - null fields (and every field of a null rel) render as JSON null;
+  *    booleans as true/false; integral fields via Long.toString — each
+  *    the exact value of the Column form's
+  *    `coalesce(cast(c as string), 'null')`.
   *
   * Field ordinals are resolved BY NAME from the input struct type, so a
   * schema reorder cannot silently misrender. Byte-identity is pinned by
@@ -46,10 +48,13 @@ case class JumpsJson(child: Expression)
     case ArrayType(st: StructType, _)
         if st.fieldNames.contains("id") && st.fieldNames.contains("name") &&
           st.fieldNames.contains("rels") =>
-      st("rels").dataType match {
-        case ArrayType(_: StructType, _) => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
+      (st("id").dataType, st("name").dataType, st("rels").dataType) match {
+        case (StringType, StringType, ArrayType(_: StructType, _)) =>
+          TypeCheckResult.TypeCheckSuccess
+        case (StringType, StringType, other) => TypeCheckResult.TypeCheckFailure(
           s"jumps_json expects rels: array<struct>, got $other")
+        case (i, n, _) => TypeCheckResult.TypeCheckFailure(
+          s"jumps_json expects id and name: string, got $i and $n")
       }
     case other => TypeCheckResult.TypeCheckFailure(
       s"jumps_json expects array<struct<id,name,rels>>, got $other")
@@ -92,7 +97,7 @@ case class JumpsJson(child: Expression)
 
   private def appendField(sb: java.lang.StringBuilder, row: InternalRow,
                           idx: Int, dt: DataType): Unit =
-    if (row.isNullAt(idx)) sb.append("null")
+    if (row == null || row.isNullAt(idx)) sb.append("null")
     else dt match {
       case StringType => appendEscaped(sb, row.getUTF8String(idx))
       case BooleanType => sb.append(if (row.getBoolean(idx)) "true" else "false")
@@ -102,38 +107,49 @@ case class JumpsJson(child: Expression)
         s"jumps_json: unsupported rel field type $other")
     }
 
+  private def appendDoc(sb: java.lang.StringBuilder, doc: InternalRow): Unit = {
+    sb.append("{\"id\":")
+    if (doc.isNullAt(idIdx)) sb.append("null")
+    else appendEscaped(sb, doc.getUTF8String(idIdx))
+    sb.append(",\"name\":")
+    if (doc.isNullAt(nameIdx)) sb.append("null")
+    else appendEscaped(sb, doc.getUTF8String(nameIdx))
+    sb.append(",\"rels\":[")
+    val rels = doc.getArray(relsIdx)
+    var r = 0
+    while (r < rels.numElements()) {
+      if (r > 0) sb.append(',')
+      // a null rel renders every field null, as the reference does
+      val rel = if (rels.isNullAt(r)) null else rels.getStruct(r, relSt.length)
+      var f = 0
+      while (f < relFields.length) {
+        val (nm, idx, dt) = relFields(f)
+        sb.append(if (f == 0) "{\"" else ",\"").append(nm).append("\":")
+        appendField(sb, rel, idx, dt)
+        f += 1
+      }
+      sb.append('}')
+      r += 1
+    }
+    sb.append("]}")
+  }
+
   override protected def nullSafeEval(input: Any): Any = {
     val docs = input.asInstanceOf[ArrayData]
     val sb = new java.lang.StringBuilder(1 << 16)
+    var rendered = 0
     var d = 0
     while (d < docs.numElements()) {
-      if (d > 0) sb.append(',')
-      val doc = docs.getStruct(d, docSt.length)
-      sb.append("{\"id\":")
-      if (doc.isNullAt(idIdx)) sb.append("null")
-      else appendEscaped(sb, doc.getUTF8String(idIdx))
-      sb.append(",\"name\":")
-      if (doc.isNullAt(nameIdx)) sb.append("null")
-      else appendEscaped(sb, doc.getUTF8String(nameIdx))
-      sb.append(",\"rels\":[")
-      if (!doc.isNullAt(relsIdx)) {
-        val rels = doc.getArray(relsIdx)
-        var r = 0
-        while (r < rels.numElements()) {
-          if (r > 0) sb.append(',')
-          val rel = rels.getStruct(r, relSt.length)
-          var f = 0
-          while (f < relFields.length) {
-            val (nm, idx, dt) = relFields(f)
-            sb.append(if (f == 0) "{\"" else ",\"").append(nm).append("\":")
-            appendField(sb, rel, idx, dt)
-            f += 1
-          }
-          sb.append('}')
-          r += 1
+      // a null doc or a doc with null rels is dropped, as in the Column
+      // reference: its per-doc concat goes NULL and array_join skips it
+      if (!docs.isNullAt(d)) {
+        val doc = docs.getStruct(d, docSt.length)
+        if (!doc.isNullAt(relsIdx)) {
+          if (rendered > 0) sb.append(',')
+          appendDoc(sb, doc)
+          rendered += 1
         }
       }
-      sb.append("]}")
       d += 1
     }
     UTF8String.fromString(sb.toString)

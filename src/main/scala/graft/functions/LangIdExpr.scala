@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -17,9 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - per language, score = number of DISTINCT tokens present in its
   *     stopword list (array_intersect dedups — replicated with a
   *     seen-token set);
-  *   - result = the language with the unique maximum score; a zero max
-  *     or a tie at the max is "unknown" (array_max over struct(score,
-  *     lang) + the nAtMax==1 guard collapse to exactly this).
+  *   - result = the language with the unique maximum score; a zero max,
+  *     a tie at the max or null text is "unknown" (array_max over
+  *     struct(score, lang) + the nAtMax==1 guard collapse to exactly
+  *     this).
   *
   * The Column form evaluates the whole chain as ONE interpreted
   * higher-order expression per row (let-bound transforms are
@@ -50,6 +52,15 @@ case class LangIdExpr(child: Expression, langs: Seq[(String, Seq[String])])
     m
   }
   @transient private lazy val unknown = UTF8String.fromString("unknown")
+
+  // null text carries no stopword evidence: "unknown", as the Column
+  // reference's when(...).otherwise("unknown") yields, never NULL
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = {
+    val text = child.eval(input)
+    if (text == null) unknown else nullSafeEval(text)
+  }
 
   override protected def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[UTF8String].toLowerCase.toString

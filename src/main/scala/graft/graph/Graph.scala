@@ -425,14 +425,16 @@ object Graph {
     * vector join is a co-located shuffled-hash join: nothing node-sized
     * ever has to fit on one executor, and the edge table never
     * re-shuffles. Requires a non-empty edge set (the L1 mass is
-    * otherwise zero and the quotient undefined). */
+    * otherwise zero and the quotient undefined). Edges with a null `src`
+    * or `dst` are dropped: they name no node, and a null-keyed half-step
+    * group would pose as the rollup's grouping-total row. */
   def hits(nodes: DataFrame, edges: DataFrame, iters: Int = 8,
            copartition: Boolean = false): DataFrame = {
     require(iters >= 1, s"hits needs at least one iteration, got $iters")
     val ndPlan = nodes.select(col("node"))
     val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
       .ckpt()
-    val e0 = edges.select(col("src"), col("dst"), col("w"))
+    val e0 = hitsEdges(edges)
     val e = (if (copartition) e0.repartition(col("src")) else e0).persist()
     // derived from the PERSISTED e, not e0: building the dst copy from
     // the raw plan would re-run the whole upstream edge derivation
@@ -500,6 +502,10 @@ object Graph {
     * map-side PARTIAL aggregation (rollup partial-aggregates per
     * grouping set), pinned by GraphSpec via [[hitsHalfStepAudit]] on
     * this one shared copy. */
+  private def hitsEdges(edges: DataFrame): DataFrame =
+    edges.filter(col("src").isNotNull && col("dst").isNotNull)
+      .select(col("src"), col("dst"), col("w"))
+
   private def halfStepOf(edges: DataFrame, vecSide: DataFrame,
                          from: String, to: String): DataFrame =
     edges.join(vecSide, edges(from) === vecSide("node"))
@@ -514,7 +520,7 @@ object Graph {
     val ndPlan = nodes.select(col("node"))
     val nd = (if (copartition) ndPlan.repartition(col("node")) else ndPlan)
       .ckpt()
-    val e0 = edges.select(col("src"), col("dst"), col("w"))
+    val e0 = hitsEdges(edges)
     val e = (if (copartition) e0.repartition(col("src")) else e0).ckpt()
     val eDst = if (copartition) e.repartition(col("dst")).ckpt() else e
     def side(v: DataFrame): DataFrame =

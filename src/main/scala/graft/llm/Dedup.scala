@@ -2,6 +2,8 @@ package graft.llm
 
 import graft.Ckpt._
 
+import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -227,24 +229,6 @@ object Dedup {
         col("__iu.inter").cast("double") / col("__iu.union"))
       .filter(col("jaccard") >= threshold)
       .select("id1", "id2", "jaccard")
-  }
-
-  /** SimHash (64-bit): per word-token hash, each bit votes +1/-1 weighted by
-    * term frequency; the sign per bit position forms the fingerprint.
-    * Implemented as explode → 64 conditional sums → bit reassembly — a single
-    * partial+final aggregate, no UDF. */
-  def simhash(df: DataFrame, id: String, text: String): DataFrame = {
-    val tokens = df.select(col(id),
-      explode(split(lower(col(text)), "\\s+")).as("tok"))
-      .withColumn("h", xxhash64(col("tok")))
-    val bitSums = (0 until 64).map { i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$i")
-    }
-    val summed = tokens.groupBy(col(id)).agg(bitSums.head, bitSums.tail: _*)
-    val fp = (0 until 64).map { i =>
-      when(col(s"b$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
-    summed.select(col(id), fp.as("simhash"))
   }
 
   /** k-universal coefficient pairs for the portable MinHash family, shared
@@ -549,10 +533,12 @@ object Dedup {
        |FROM tot t LEFT JOIN novel n USING ($id) ORDER BY t.$id""".stripMargin
   }
 
-  /** Portable SimHash (60-bit): identical to `simhash` but the token hash
-    * is the first 15 hex digits of md5 — computable bit-for-bit by any
-    * engine, so the fingerprint itself is oracle-checkable. Tokens split on
-    * a single space to keep both sides' tokenization identical. */
+  /** SimHash (60-bit): per word-token hash, each bit votes +1/-1 weighted
+    * by term frequency; the sign per bit position forms the fingerprint.
+    * The token hash is the first 15 hex digits of md5 — computable
+    * bit-for-bit by any engine, so the fingerprint itself is
+    * oracle-checkable. Tokens split on a single space to keep both sides'
+    * tokenization identical. */
   def simhashPortable(df: DataFrame, id: String, text: String): DataFrame =
     // fused native kernel (functions/MinHashExpr.portableSimhash):
     // bit-identical to the explode + md5-hex + 60-column vote aggregate
@@ -580,41 +566,6 @@ object Dedup {
        |SELECT $id, ($combine)::BIGINT AS simhash FROM sums ORDER BY $id""".stripMargin
   }
 
-  /** Near-dup pairs by SimHash hamming distance <= maxDist, bucketed by the
-    * 4 16-bit chunks (pigeonhole: any pair within distance 3 shares at least
-    * one exact chunk) — again no all-pairs join. */
-  def simhashCandidates(df: DataFrame, id: String, text: String, maxDist: Int = 3): DataFrame = {
-    val fp = simhash(df, id, text)
-    val chunked = fp.select(col(id).as("doc"), col("simhash"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"), shiftright(col("simhash"), c * 16).bitwiseAND(0xFFFFL).as("ckey"))
-      }: _*)).as("cc"))
-      .select(col("doc"), col("simhash"), col("cc.chunk"), col("cc.ckey"))
-    val a = chunked.as("a"); val b = chunked.as("b")
-    val hamming = {
-      val x = col("a.simhash").bitwiseXOR(col("b.simhash"))
-      bit_count(x)
-    }
-    a.join(b, col("a.chunk") === col("b.chunk") && col("a.ckey") === col("b.ckey") &&
-              col("a.doc") < col("b.doc"))
-      .select(col("a.doc").as("id1"), col("b.doc").as("id2"),
-              bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).as("dist"))
-      // dist is a pure function of the pair, so filtering BEFORE the
-      // distinct is identical — and the dedup shuffle then carries only
-      // pairs inside the distance band, not every chunk collision
-      .filter(col("dist") <= maxDist)
-      .distinct()
-  }
-
-  /** [[simhashCandidates]] over the PORTABLE 60-bit fingerprint
-    * ([[simhashPortable]]): 4 pigeonhole chunks of 15 bits, pairs sharing
-    * any exact chunk scored by Hamming distance, kept at `dist <= maxDist`.
-    * Every value is md5-derived, so the bucketing + distance machinery
-    * replays bit-for-bit in DuckDB ([[simhashCandidatesPortableOracleSql]])
-    * — the hash-green twin of the xxhash64 fast path. Recall contract is
-    * the fast path's: 4 chunks GUARANTEE any pair within distance 3 shares
-    * a chunk; above that the chunk share is heuristic (same posture as
-    * dd4's maxDist=10). */
   /** The 4 × 15-bit pigeonhole chunks of the portable 60-bit fingerprint
     * — ONE definition shared by [[simhashCandidatesPortable]] and
     * [[simhashDiagnostics]] (and mirrored by their oracles' `(simhash >>
@@ -627,6 +578,14 @@ object Dedup {
       }: _*)).as("cc"))
       .select(col("doc"), col("simhash"), col("cc.chunk"), col("cc.ckey"))
 
+  /** Near-dup pairs by Hamming distance of the 60-bit fingerprint
+    * ([[simhashPortable]]): 4 pigeonhole chunks of 15 bits, pairs sharing
+    * any exact chunk scored by Hamming distance, kept at `dist <= maxDist`
+    * — no all-pairs join. Every value is md5-derived, so the bucketing +
+    * distance machinery replays bit-for-bit in DuckDB
+    * ([[simhashCandidatesPortableOracleSql]]). 4 chunks GUARANTEE any pair
+    * within distance 3 shares a chunk; above that the chunk share is
+    * heuristic (dd4's maxDist=10). */
   def simhashCandidatesPortable(df: DataFrame, id: String, text: String,
                                 maxDist: Int = 10): DataFrame = {
     // checkpointed: the chunk self-join otherwise rebuilds the md5
@@ -1676,61 +1635,58 @@ object Dedup {
     * Scale shape: candidate volume is Σ cell² — the deployment knob is
     * nCells, grown with the corpus so the expected cell size stays
     * constant (nCells ≈ N / targetCellSize); the within-cell self-join is
-    * an equi-join on the cell id, partitioned at full cluster width by
-    * Ivf.build. Model-dependent output (k-means), so registry entries are
-    * rows-only; LlmSpec pins precision (every dropped doc has a genuine
-    * ≥ threshold neighbor) and recall vs the exact pair set. */
+    * an equi-join on the cell id.
+    *
+    * The cells come from MLlib KMeans (k-means|| init, run to
+    * convergence). Its output is model-dependent, so no registry entry
+    * runs it; it stays because its sampling init finds more of the
+    * exact ≥ threshold pairs than the md5-seeded portable quantizer:
+    * on the sf0.001 embeddings at 8 cells, recall 0.62 vs 0.41 for
+    * [[semanticDedupPortable]] (RelevanceSpec pins ≥ 0.5). Returns the
+    * surviving input rows. */
   def semanticDedup(emb: DataFrame, id: String, vec: String, threshold: Double,
-                    nCells: Int = 16, seed: Long = 42L): DataFrame = {
-    val idx = Ivf.build(emb, id, vec, nCells, seed)
-    // norm hoisted onto the cell rows (computed once per INPUT row, below
-    // the join) — the within-cell pair verify then pays ONE dot fold per
-    // pair instead of three; same dot/sqrt/divide order, bit-identical
-    val withN = idx.assigned.withColumn("__n",
+                    nCells: Int): DataFrame = {
+    val withVec = emb.withColumn("__v", array_to_vector(col(vec).cast("array<double>")))
+    val model = new KMeans().setK(nCells).setSeed(42L)
+      .setFeaturesCol("__v").setPredictionCol("cell")
+      .fit(withVec)
+    // checkpointed: both join sides read the cell assignment
+    val assigned = model.transform(withVec).drop("__v").ckpt()
+    emb.join(cellDuplicates(assigned, id, vec, threshold), Seq(id), "left_anti")
+  }
+
+  /** The larger id of every within-`cell` pair at cosine >= threshold.
+    * The norm is hoisted onto the cell rows (the dd12 pattern): one dot
+    * fold per PAIR instead of three, same dot/sqrt/divide order. */
+  private def cellDuplicates(assigned: DataFrame, id: String, vec: String,
+                             threshold: Double): DataFrame = {
+    val withN = assigned.withColumn("__n",
       sqrt(Similarity.dotProduct(col(vec), col(vec))))
-    val a = withN.select(col("cell"), col(id).as("__id1"), col(vec).as("__v1"),
-      col("__n").as("__n1"))
-    val b = withN.select(col("cell"), col(id).as("__id2"), col(vec).as("__v2"),
-      col("__n").as("__n2"))
-    val dropped = a.join(b, "cell")
+    val a = withN.select(col("cell"), col(id).as("__id1"),
+      col(vec).as("__v1"), col("__n").as("__n1"))
+    val b = withN.select(col("cell"), col(id).as("__id2"),
+      col(vec).as("__v2"), col("__n").as("__n2"))
+    a.join(b, "cell")
       .filter(col("__id1") < col("__id2"))
       .filter(Similarity.dotProduct(col("__v1"), col("__v2"))
         / (col("__n1") * col("__n2")) >= threshold)
       .select(col("__id2").as(id)).distinct()
-    emb.join(dropped, Seq(id), "left_anti")
   }
 
-  /** Portable SemDeDup — [[semanticDedup]] with the deterministic
-    * md5-seeded fixed-round Lloyd's coarse quantizer
-    * ([[Ivf.portableQuantizer]], the sim5b/sim6b pattern) in place of
-    * MLlib KMeans, so the WHOLE pipeline (cell seeding, every Lloyd's
-    * round, the within-cell cosine verify, the larger-id drop) replays
-    * bit-for-bit in DuckDB via [[semanticDedupPortableOracleSql]]:
-    * 6dp-floor-rounded centroid updates keep assignments
-    * engine-identical, and the cosine is the same
-    * hoisted-norm dot/sqrt/divide chain on both engines. Same scale
-    * shape as [[semanticDedup]] (candidate volume Σ cell², nCells grown
-    * with the corpus); the MLlib path keeps the sampling-init/early-exit
-    * production quantizer and its LlmSpec precision/recall pins.
+  /** Portable SemDeDup — [[semanticDedup]] with the cells from the
+    * deterministic md5-seeded fixed-round Lloyd's quantizer
+    * ([[Ivf.portableQuantizer]], the sim5b/sim6b pattern), so the WHOLE
+    * pipeline (cell seeding, every Lloyd's round, the within-cell cosine
+    * verify, the larger-id drop) replays bit-for-bit in DuckDB via
+    * [[semanticDedupPortableOracleSql]]: 6dp-floor-rounded centroid
+    * updates keep assignments engine-identical, and the cosine is the
+    * same hoisted-norm dot/sqrt/divide chain on both engines.
     * Returns the surviving (id) rows (cast to long, ascending). */
   def semanticDedupPortable(emb: DataFrame, id: String, vec: String,
                             threshold: Double, nCells: Int,
                             rounds: Int): DataFrame = {
     val (_, assigned) = Ivf.portableQuantizer(emb, id, vec, nCells, rounds)
-    // norm hoisted onto the cell rows (the dd12 pattern): one dot fold
-    // per PAIR instead of three
-    val withN = assigned.withColumn("__n",
-      sqrt(Similarity.dotProduct(col("pv"), col("pv"))))
-    val a = withN.select(col("cell"), col("pid").as("__id1"),
-      col("pv").as("__v1"), col("__n").as("__n1"))
-    val b = withN.select(col("cell"), col("pid").as("__id2"),
-      col("pv").as("__v2"), col("__n").as("__n2"))
-    val dropped = a.join(b, "cell")
-      .filter(col("__id1") < col("__id2"))
-      .filter(Similarity.dotProduct(col("__v1"), col("__v2"))
-        / (col("__n1") * col("__n2")) >= threshold)
-      .select(col("__id2").as("pid")).distinct()
-    assigned.join(dropped, Seq("pid"), "left_anti")
+    assigned.join(cellDuplicates(assigned, "pid", "pv", threshold), Seq("pid"), "left_anti")
       .select(col("pid").as(id))
   }
 

@@ -2,54 +2,24 @@ package graft.llm
 
 import graft.Ckpt._
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.{Vector => MlVector}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) approximate nearest neighbor — the classic scale
   * path next to sign-LSH: a k-means coarse quantizer partitions the corpus
-  * into `nLists` cells; a query probes only its `nProbes` nearest cells and
-  * reranks exactly inside them.
-  *
-  * Spark-first composition: MLlib KMeans trains the quantizer (itself a
-  * distributed job), cell assignment is one model.transform pass, the cell
-  * table is partitioned by cell id, and probing is an equi-join on cell id
-  * with centroids broadcast. Corpus cost per query ≈ nProbes/nLists of a
+  * into `k` cells; a query probes only its `nProbes` nearest cells and
+  * reranks exactly inside them. Corpus cost per query ≈ nProbes/k of a
   * full scan — the knob a 100 TB deployment turns.
+  *
+  * The quantizer is deterministic and cross-engine-replayable
+  * ([[portableQuantizer]]), so every stage of a search — seeding, each
+  * Lloyd's round, the probe and the rerank — replays in DuckDB
+  * ([[portableOracleSql]]).
   */
 object Ivf {
 
-  final case class Index(centroids: Array[(Int, Array[Double])], assigned: DataFrame) {
-    /** Frees the cached cell assignments. Call when done probing — repeated
-      * build() calls in one session (bench loops, parameter sweeps) would
-      * otherwise accumulate cached partitions until storage eviction. */
-    def release(): Unit = { assigned.unpersist(); () }
-  }
-
-  /** Train the quantizer and assign every vector to its cell. */
-  def build(corpus: DataFrame, id: String, vec: String,
-            nLists: Int, seed: Long = 42L): Index = {
-    val withVec = corpus.withColumn("__v", array_to_vector(col(vec).cast("array<double>")))
-    val model = new KMeans().setK(nLists).setSeed(seed)
-      .setFeaturesCol("__v").setPredictionCol("cell")
-      .fit(withVec)
-    // co-locate cells at full cluster width: repartition(col) alone caps
-    // populated partitions at nLists; passing numPartitions keeps every
-    // core busy at large nLists. The assigned table is an INDEX — built
-    // once, probed many times — so persist it.
-    val assigned = model.transform(withVec).drop("__v")
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism, col("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val centroids = model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) }
-    Index(centroids, assigned)
-  }
-
-  /** Deterministic, cross-engine-replayable IVF coarse quantizer — the
-    * portable twin of [[build]] (the sim4b/cur9 determinism pattern
-    * lifted to k-means): initial centroids are the `k` vectors with the
+  /** Deterministic, cross-engine-replayable IVF coarse quantizer (the
+    * sim4b/cur9 determinism pattern lifted to k-means): initial centroids are the `k` vectors with the
     * smallest md5(id) (engine-shared pseudo-random pick), then `rounds`
     * FIXED Lloyd's iterations. Each update rounds centroid coordinates
     * through the engine-identical floor(x·10⁶+0.5)/10⁶ fold, so
@@ -62,10 +32,8 @@ object Ivf {
     * Scale shape: per round one literal-centroid argmin projection over
     * the corpus scan (n×k SqDist evaluations inside one expression — no
     * crossJoin rows, no per-id shuffle) + one (cell, dim)-sized mean
-    * aggregate — linear in the corpus, the same cost class as MLlib's
-    * own Lloyd's pass; lineage truncated per round. MLlib [[build]] stays the production path (sampling init,
-    * early convergence); this twin exists so the quantizer itself is
-    * oracle-checkable end-to-end.
+    * aggregate — linear in the corpus, the same cost class as a
+    * distributed Lloyd's pass; lineage truncated per round.
     *
     * Returns (centroids (cell, cv), assignments (pid, pv, cell)). */
   def portableQuantizer(corpus: DataFrame, id: String, vec: String,
@@ -291,32 +259,5 @@ object Ivf {
        |       floor(s * 10000 + 0.5) / 10000.0 AS sim
        |FROM scored QUALIFY rank <= $kTop
        |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Approximate top-k: probe the nProbes cells whose centroids are nearest
-    * (by cosine) to each query, rerank exactly within them. */
-  def topK(index: Index, id: String, vec: String,
-           queries: DataFrame, qid: String, qvec: String,
-           k: Int, nProbes: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centroidDf = index.centroids.toSeq.toDF("cell", "centroid")
-    // per query: cosine to every centroid (tiny, broadcast), keep nProbes
-    val probed = queries.crossJoin(broadcast(centroidDf))
-      .withColumn("csim", Similarity.cosine(col(qvec), col("centroid")))
-      .withColumn("__r", row_number().over(
-        Window.partitionBy(col(qid)).orderBy(desc("csim"), asc("cell"))))
-      .filter(col("__r") <= nProbes)
-      .select(col(qid), col(qvec), col("cell"))
-    // equi-join on cell id: each query only touches its probed cells
-    val topk = udaf(new TopKAgg(k))
-    index.assigned.join(broadcast(probed), "cell")
-      .select(col(qid).as("query_id"), col(id).cast("long").as("id"),
-              Similarity.cosine(col(vec), col(qvec)).as("sim"))
-      .groupBy("query_id")
-      .agg(topk(col("sim"), col("id")).as("tk"))
-      .select(col("query_id"), posexplode(col("tk")))
-      .select(col("query_id"), col("col.id").as("id"), col("col.sim").as("sim"),
-              (col("pos") + 1).cast("int").as("rank"))
   }
 }

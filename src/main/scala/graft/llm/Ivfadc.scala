@@ -443,7 +443,7 @@ object Ivfadc {
     * one projection, no join, no shuffle, no UDF. Right for quantizer
     * tiers that fit in an expression (k·dim up to a few hundred K —
     * both tiers here); a 64k-cell coarse tier would instead broadcast
-    * the centroid matrix as data (the [[Ivf.topK]] centDf shape) or a
+    * the centroid matrix as data (a broadcast centroid frame) or a
     * broadcast-var native expression, trading one projection for a
     * broadcast join — same shuffle count, different k ceiling. */
   private def centArrLit(cs: Array[Array[Double]]): Column =

@@ -2,8 +2,6 @@ package graft.llm
 
 import graft.Ckpt._
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -12,25 +10,17 @@ import org.apache.spark.sql.functions._
   * Nearest Neighbor Search", TPAMI 2011). IVF (Ivf.scala) bounds how much
   * of the corpus a query SCANS; PQ bounds how many BYTES each scanned
   * vector costs: the 64-float embedding (256 B) compresses to `m` small
-  * codes (m bytes at k<=256), and query-time scoring is `m` table lookups
-  * instead of `dim` multiplies (ADC — asymmetric distance computation).
-  *
-  * Spark-first composition: per-subspace MLlib KMeans trains the
-  * codebooks (index-build time, m small distributed fits); encoding is m
-  * model.transform passes producing one array<int> codes column; ADC
-  * scoring joins the compact codes table against a BROADCAST per-query
-  * lookup table (map of subspace-code -> partial dot), so the scan side
-  * never touches the original vectors. Exact rerank of the top `rerank`
-  * candidates restores true cosines — the standard two-stage PQ search.
+  * codes (m bytes at k<=256), and query-time scoring is `m` subspace
+  * distance terms instead of `dim` multiplies (ADC — asymmetric distance
+  * computation). Exact rerank of the top `rerank` candidates restores
+  * true cosines — the standard two-stage PQ search.
   */
 object Pq {
 
   /** Run the m independent per-subspace fits concurrently — an index
     * build is dozens of tiny scheduler-latency-bound jobs per fit, so
-    * the sequential chain costs m× the wall of one. Shared by the MLlib
-    * and portable paths so a concurrency tweak lands once. Each fit is a
-    * pure function of its slice + seed: interleaving never changes the
-    * models.
+    * the sequential chain costs m× the wall of one. Each fit is a pure
+    * function of its slice: interleaving never changes the codebooks.
     *
     * Each fit runs on its OWN short-lived thread (m is 4-8, a fit blocks
     * for seconds on Spark jobs): a fit parked on the shared fork-join
@@ -52,106 +42,13 @@ object Pq {
     finally ec.shutdown()
   }
 
-  /** Per-subspace codebooks + the encoded corpus (id, codes array<int>).
-    * `codes` is persisted: it is an index, built once and probed many
-    * times. Call release() when done. */
-  final case class Index(m: Int, k: Int, subDim: Int,
-                         codebooks: Array[Array[(Int, Array[Double])]],
-                         codes: DataFrame) {
-    def release(): Unit = { codes.unpersist(); () }
-  }
-
-  /** Train per-subspace quantizers and encode the corpus. `dim` must be
-    * divisible by `m`; `k` codes per subspace (k=16 → codes fit in a
-    * nibble; 256 would fill a byte, the classic PQ layout). */
-  def build(corpus: DataFrame, id: String, vec: String,
-            m: Int = 4, k: Int = 16, dim: Int = 64, seed: Long = 42L,
-            maxIter: Int = 10): Index = {
-    require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val subDim = dim / m
-    val base = corpus.select(col(id).cast("long").as("id"), col(vec).as("__vec"))
-    def subCol(s: Int): Column =
-      array_to_vector(slice(col("__vec"), s * subDim + 1, subDim).cast("array<double>"))
-    val models = fitConcurrently(m) { s =>
-      new KMeans().setK(k).setSeed(seed + s).setMaxIter(maxIter)
-        .setFeaturesCol("__sub").setPredictionCol(s"__c$s")
-        .fit(base.withColumn("__sub", subCol(s)))
-    }
-    // encoding: stack the m transforms lazily over one corpus pass
-    val df = (0 until m).foldLeft(base) { (d, s) =>
-      models(s).transform(d.withColumn("__sub", subCol(s))).drop("__sub")
-    }
-    val books = models.map(_.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toArray).toArray
-    val codes = df
-      .select(col("id"), array((0 until m).map(s => col(s"__c$s")): _*).as("codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Index(m, k, subDim, books, codes)
-  }
-
-  private def dotCol(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  /** Approximate top-k by ADC over the codes table, then exact cosine
-    * rerank of the top `rerank` candidates against the original vectors.
-    *
-    * The per-query lookup table (m·k partial dots) is computed as a plain
-    * aggregation — queries × codebook (both tiny, codebook broadcast) —
-    * and ships as one broadcast map column; the big side of the join
-    * touches only (id, codes), never the original vectors. */
-  def topK(index: Index, corpus: DataFrame, id: String, vec: String,
-           queries: DataFrame, qid: String, qvec: String,
-           kTop: Int, rerank: Int = 50): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val codebook = (for {
-      s <- 0 until index.m
-      (code, cent) <- index.codebooks(s)
-    } yield (s, code, cent.toSeq)).toDF("s", "code", "cent")
-    val luts = queries
-      .select(col(qid).cast("long").as("query_id"), col(qvec).as("__qv"))
-      .crossJoin(broadcast(codebook))
-      .withColumn("pd", dotCol(
-        slice(col("__qv"), col("s") * index.subDim + 1, lit(index.subDim))
-          .cast("array<double>"),
-        col("cent")))
-      .groupBy("query_id")
-      .agg(map_from_entries(collect_list(struct(
-        (col("s") * index.k + col("code")).cast("int").as("key"),
-        col("pd").as("value")))).as("lut"))
-    // ADC scan: broadcast the per-query tables against the compact codes
-    val adc = index.codes.crossJoin(broadcast(luts))
-      .withColumn("approx",
-        aggregate(
-          zip_with(col("codes"), sequence(lit(0), lit(index.m - 1)),
-            (code, s) => element_at(col("lut"), (s * index.k + code).cast("int"))),
-          lit(0.0), (acc, v) => acc + v))
-    val topkAgg = udaf(new TopKAgg(rerank))
-    val cands = adc.groupBy("query_id")
-      .agg(topkAgg(col("approx"), col("id")).as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("c"))
-      .select(col("query_id"), col("c.id").as("id"))
-    // exact rerank of the shortlist only
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(desc("sim"), asc("id"))
-    cands
-      .join(corpus.select(col(id).cast("long").as("id"), col(vec).as("__cv")), "id")
-      .join(broadcast(queries.select(col(qid).cast("long").as("query_id"),
-        col(qvec).as("__qv"))), "query_id")
-      .select(col("query_id"), col("id"),
-        Similarity.cosine(col("__cv"), col("__qv")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= kTop)
-  }
-
-  /** Portable PQ twin (sim6b): per-subspace md5-seeded fixed-round
+  /** Portable PQ search (sim6, sim6b): per-subspace md5-seeded fixed-round
     * Lloyd's codebooks ([[Ivf.portableQuantizer]] over each slice),
     * squared-L2 ADC shortlist, exact cosine rerank. The codes ride WIDE
     * (c0..c{m-1} columns), so the ADC distance is an explicit
     * left-to-right `+` chain of per-subspace d² terms — no aggregation
     * whose fold order could differ between engines — and every stage
-    * replays in DuckDB ([[portableOracleSql]]). MLlib [[build]]/[[topK]]
-    * stay the production path. */
+    * replays in DuckDB ([[portableOracleSql]]). */
   def portableTopK(corpus: DataFrame, id: String, vec: String,
                    m: Int, k: Int, rounds: Int, dim: Int,
                    nQueries: Int, rerank: Int, kTop: Int): DataFrame = {

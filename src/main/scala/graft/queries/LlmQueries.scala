@@ -77,14 +77,17 @@ object LlmQueries {
       |SELECT query_id, id, sim, rank::INT AS rank FROM ranked
       |WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
 
-  /** Portable IVF top-10 (md5-Lloyd quantizer, 2-cell probe, in-cell
-    * rerank) for the same query set — sim5b's pipeline, shared with the
-    * sim10 recall probe via [[QueryMemo]] (the quantizer rounds run once
-    * per pass, whichever rider comes first). */
-  private def ivfPortableTopK(s: SparkSession, d: String): DataFrame =
-    QueryMemo.frame(s, d, "sim_ivf_topk") {
+  /** Portable IVF top-`kTop` (md5-Lloyd quantizer over `cells` cells,
+    * `probes`-cell probe, in-cell rerank) for the vec_id < 3 query set —
+    * sim5's and sim5b's pipeline. Memoized per parameter set via
+    * [[QueryMemo]], so sim5b and the sim10 recall probe share one frame
+    * (the quantizer rounds run once per pass, whichever rider comes
+    * first). */
+  private def ivfPortableTopK(s: SparkSession, d: String, cells: Int,
+                              probes: Int, rounds: Int, kTop: Int): DataFrame =
+    QueryMemo.frame(s, d, s"sim_ivf_topk_${cells}_${probes}_${rounds}_$kTop") {
     val (cent, assigned) = Ivf.portableQuantizer(
-      t(s, d, "embeddings"), "vec_id", "embedding", k = 8, rounds = 4)
+      t(s, d, "embeddings"), "vec_id", "embedding", k = cells, rounds = rounds)
     val w = org.apache.spark.sql.expressions.Window
     val q = assigned.filter(col("pid") < 3)
       .select(col("pid").as("qid"), col("pv").as("qv"))
@@ -92,17 +95,21 @@ object LlmQueries {
       .withColumn("csim", Similarity.cosine(col("qv"), col("cv")))
       .withColumn("rn", row_number().over(
         w.partitionBy("qid").orderBy(desc("csim"), asc("cell"))))
-      .filter(col("rn") <= 2)
+      .filter(col("rn") <= probes)
       .select(col("qid"), col("qv"), col("cell"))
     assigned.join(broadcast(probed), "cell")
       .withColumn("s", Similarity.cosine(col("pv"), col("qv")))
       .withColumn("rank", row_number().over(
         w.partitionBy("qid").orderBy(desc("s"), asc("pid"))))
-      .filter(col("rank") <= 10)
+      .filter(col("rank") <= kTop)
       .select(col("qid").as("query_id"), col("pid").as("id"), col("rank"),
         (floor(col("s") * 10000 + 0.5) / 10000.0).as("sim"))
       .orderBy("query_id", "rank")
   }
+
+  /** sim5b's parameters: 8 cells, 2 probes, 4 rounds, top-10. */
+  private def sim5bTopK(s: SparkSession, d: String): DataFrame =
+    ivfPortableTopK(s, d, cells = 8, probes = 2, rounds = 4, kTop = 10)
 
   private val sim5bOracleSql: String =
     Ivf.portableOracleSql("embeddings", "vec_id", "embedding",
@@ -499,11 +506,14 @@ object LlmQueries {
         .orderBy("id1", "id2"),
       None),
 
-    // ---- SimHash near-dup candidates (rows-only: xxhash64 fingerprint) ----
+    // ---- SimHash near-dup candidates over the md5-derived 60-bit
+    // fingerprint: every chunk bucket and distance replays in DuckDB ----
     QueryDef("dd4_simhash_neardup",
-      (s, d) => Dedup.simhashCandidates(t(s, d, "documents"), "doc_id", "text", maxDist = 10)
+      (s, d) => Dedup.simhashCandidatesPortable(t(s, d, "documents"), "doc_id", "text",
+          maxDist = 10)
         .orderBy("id1", "id2"),
-      None),
+      Some(Dedup.simhashCandidatesPortableOracleSql("documents", "doc_id", "text",
+        maxDist = 10))),
 
     // ---- portable MinHash signatures — bit-exact oracle via md5-derived
     // shingle hashes ----
@@ -1548,29 +1558,20 @@ object LlmQueries {
       Some(Similarity.lshTopKPortableOracleSql(
         "embeddings", "vec_id", "embedding", "vec_id < 3", k = 10))),
 
-    // ---- similarity: IVF ANN (k-means coarse quantizer + cell probing;
-    // rows-only: k-means assignment is model-dependent; recall vs exact is
-    // asserted in LlmSpec) ----
-    QueryDef("sim5_ivf_ann",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val q = emb.filter(col("vec_id") < 3)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val idx = Ivf.build(emb, "vec_id", "embedding", nLists = 16)
-        Ivf.topK(idx, "vec_id", "embedding", q, "qid", "qvec", k = 10, nProbes = 4)
-          .withColumn("sim", round(col("sim"), 4))
-          .orderBy("query_id", "rank")
-      },
-      None),
-
-    // ---- portable IVF ANN: md5-seeded fixed-round Lloyd's quantizer +
-    // cell probe + in-cell rerank, EVERY stage replayed in DuckDB
+    // ---- similarity: IVF ANN — md5-seeded fixed-round Lloyd's quantizer
+    // + cell probe + in-cell rerank, EVERY stage replayed in DuckDB
     // (unrolled round CTEs; 6dp-rounded centroids make assignments
     // engine-identical; left-to-right cosine folds make ranks
-    // tie-stable) — the third ANN family with an end-to-end oracle.
-    // sim5 keeps the MLlib production path. ----
+    // tie-stable). sim5 probes 4 of 16 cells; sim5b 2 of 8. ----
+    QueryDef("sim5_ivf_ann",
+      (s, d) => ivfPortableTopK(s, d, cells = 16, probes = 4, rounds = 4, kTop = 10)
+        .select("query_id", "id", "sim", "rank"),
+      Some(Ivf.portableOracleSql("embeddings", "vec_id", "embedding",
+        k = 16, rounds = 4, dim = 64, querySql = "pid < 3",
+        nProbes = 4, kTop = 10))),
+
     QueryDef("sim5b_ivf_portable",
-      (s, d) => ivfPortableTopK(s, d),
+      (s, d) => sim5bTopK(s, d),
       Some(sim5bOracleSql)),
 
     // ---- sim10: ANN RECALL probe (the dd23/dd4d diagnostics posture for
@@ -1579,7 +1580,7 @@ object LlmQueries {
     // ANN deployment publishes before anyone trusts the index, here as a
     // first-class queryable row instead of a spec-only assertion. Both
     // inputs are themselves hash-green queries (sim2b / sim5b share
-    // these exact pipelines via exactTopKRounded / ivfPortableTopK), so
+    // these exact pipelines via exactTopKRounded / sim5bTopK), so
     // the intersection is deterministic cross-engine and the probe
     // carries a full DuckDB oracle by CTE-composing their two oracle
     // texts. Scale shape: both sides are top-k-bounded (k·queries rows),
@@ -1588,7 +1589,7 @@ object LlmQueries {
     QueryDef("sim10_ann_recall",
       (s, d) => {
         val ex = exactTopKRounded(s, d).select(col("query_id"), col("id"))
-        val iv = ivfPortableTopK(s, d)
+        val iv = sim5bTopK(s, d)
           .select(col("query_id"), col("id"), lit(1).as("hit"))
         ex.join(iv, Seq("query_id", "id"), "left")
           .groupBy("query_id")
@@ -1606,10 +1607,6 @@ object LlmQueries {
               |  ON e.query_id = i.query_id AND e.id = i.id
               |GROUP BY e.query_id ORDER BY e.query_id""".stripMargin)),
 
-    // ---- similarity: product-quantization ANN (per-subspace k-means
-    // codebooks, ADC scoring over the compact codes table, exact rerank;
-    // rows-only: k-means codebooks are model-dependent; recall vs exact is
-    // asserted in LlmSpec) ----
     // ---- sim7: SQ8 ANN — approximate top-k over the int8-quantized
     // store (emb6's codes, scored ADC-style: the affine dequantization
     // folds into a per-query constant + an int-codes dot against
@@ -1684,25 +1681,17 @@ object LlmQueries {
              |FROM rer QUALIFY rank <= 10
              |ORDER BY query_id, rank""".stripMargin)),
 
+    // ---- similarity: product-quantization ANN — per-subspace md5-seeded
+    // Lloyd's codebooks, wide-code ADC (explicit left-associative d²
+    // chain — no fold-order leakage), exact cosine rerank; EVERY stage
+    // replayed in DuckDB. sim6 trains 5 Lloyd's rounds, sim6b 3. ----
     QueryDef("sim6_pq_ann",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val q = emb.filter(col("vec_id") < 3)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        val idx = Pq.build(emb, "vec_id", "embedding", m = 4, k = 16)
-        val out = Pq.topK(idx, emb, "vec_id", "embedding", q, "qid", "qvec",
-            kTop = 10, rerank = 50)
-          .withColumn("sim", round(col("sim"), 4))
-          .orderBy("query_id", "rank")
-        out
-      },
-      None),
+      (s, d) => Pq.portableTopK(t(s, d, "embeddings"), "vec_id", "embedding",
+          m = 4, k = 16, rounds = 5, dim = 64, nQueries = 3, rerank = 50, kTop = 10)
+        .select("query_id", "id", "sim", "rank"),
+      Some(Pq.portableOracleSql("embeddings", "vec_id", "embedding",
+        m = 4, k = 16, rounds = 5, dim = 64, nQueries = 3, rerank = 50, kTop = 10))),
 
-    // ---- portable PQ ANN: per-subspace md5-seeded Lloyd's codebooks,
-    // wide-code ADC (explicit left-associative d² chain — no fold-order
-    // leakage), exact cosine rerank; EVERY stage replayed in DuckDB —
-    // with sim3 (LSH) and sim5b (IVF), all three ANN families now have
-    // an end-to-end oracle. sim6 keeps the MLlib production path. ----
     QueryDef("sim6b_pq_portable",
       (s, d) => Pq.portableTopK(t(s, d, "embeddings"), "vec_id", "embedding",
         m = 4, k = 16, rounds = 3, dim = 64, nQueries = 3, rerank = 50, kTop = 10),
@@ -1738,7 +1727,7 @@ object LlmQueries {
     // cosine rerank — the entire IVFADC search replayed in DuckDB. With
     // sim3 (LSH), sim5b (IVF), sim6b (PQ) and sim7 (SQ8), all FIVE ANN
     // families plus their flagship composition now have end-to-end
-    // oracles. sim8 keeps the MLlib production path. ----
+    // oracles. sim8 keeps the sample-trained production path. ----
     QueryDef("sim8b_ivfadc_portable",
       (s, d) => Ivfadc.portableTopK(t(s, d, "embeddings"), "vec_id", "embedding",
         kCoarse = 8, coarseRounds = 3, m = 4, k = 16, pqRounds = 3, dim = 64,
@@ -2215,9 +2204,9 @@ object LlmQueries {
     // deterministic quantizer (md5-seeded fixed-round Lloyd's — the
     // sim5b pattern), so cell seeding, every Lloyd's round, the
     // within-cell cosine verify and the larger-id drop ALL replay in
-    // DuckDB and the query hash-checks end-to-end; the MLlib sampling-
-    // init quantizer stays the production alternative
-    // (Dedup.semanticDedup) with its LlmSpec precision/recall pins ----
+    // DuckDB and the query hash-checks end-to-end. Dedup.semanticDedup
+    // keeps MLlib's k-means|| cells, spec-only, for their higher recall
+    // (RelevanceSpec) ----
     QueryDef("dd10_semantic_dedup",
       (s, d) => Dedup.semanticDedupPortable(t(s, d, "embeddings"), "vec_id", "embedding",
           threshold = 0.4, nCells = 16, rounds = 4)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Output-cardinality probe behind the growth diagnoses (the gen-sf1
   * full-registry sweep): for each named registry query, prints its result
   * row count at the given scale dir. A query whose RESULT is quadratic in
@@ -13,16 +11,7 @@ import org.apache.spark.sql.SparkSession
 object CountRows {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(sys.error("usage: CountRows <sfDir> <query...>"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // bounded-buffer typed aggregates (TopKAgg/MinKByAgg) group by
-      // corpus-sized keys: the 128-key default silently flips
-      // ObjectHashAggregate to sort-based, paying a map-side sort of
-      // the whole input (measured 2.7x on the pair summaries); buffers
-      // are <= k rows per group, so hash aggregation is safe
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(32, 32)
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- args.drop(1); q <- graft.SparkEntry.all.find(_.name == name)) {
       val t0 = System.nanoTime()

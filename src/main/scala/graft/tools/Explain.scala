@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the finalized (post-AQE) physical plan of one registry query —
   * the local iteration loop behind PLANS.md: run, read, fix the plan,
   * re-run. Run: runMain graft.tools.Explain <query> [sfDir]
@@ -11,16 +9,7 @@ object Explain {
     val name = args.headOption.getOrElse(sys.error("usage: Explain <query> [sfDir]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
     sys.props("graft.querymemo.disable") = "true"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // bounded-buffer typed aggregates (TopKAgg/MinKByAgg) group by
-      // corpus-sized keys: the 128-key default silently flips
-      // ObjectHashAggregate to sort-based, paying a map-side sort of
-      // the whole input (measured 2.7x on the pair summaries); buffers
-      // are <= k rows per group, so hash aggregation is safe
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(8, 8)
     spark.sparkContext.setLogLevel("ERROR")
     val q = graft.SparkEntry.all.find(_.name == name)
       .getOrElse(sys.error(s"unknown query: $name"))

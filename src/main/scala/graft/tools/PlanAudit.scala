@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Plan audit over the whole registry: executes each query at the given
   * scale factor (so AQE finalizes) and reports the shapes that decide
@@ -54,16 +54,7 @@ object PlanAudit {
     // audit the REAL chains: a memo hit would replace a query's upstream
     // plan with a checkpoint scan (same prop ScaleSpec's gate sets)
     sys.props("graft.querymemo.disable") = "true"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // bounded-buffer typed aggregates (TopKAgg/MinKByAgg) group by
-      // corpus-sized keys: the 128-key default silently flips
-      // ObjectHashAggregate to sort-based, paying a map-side sort of
-      // the whole input (measured 2.7x on the pair summaries); buffers
-      // are <= k rows per group, so hash aggregation is safe
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(8, 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     if (md) {

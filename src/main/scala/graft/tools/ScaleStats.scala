@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llm.Dedup
@@ -22,16 +21,7 @@ object ScaleStats {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(sys.error("usage: ScaleStats <sfDir> [label]"))
     val label = args.lift(1).getOrElse(sfDir)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // bounded-buffer typed aggregates (TopKAgg/MinKByAgg) group by
-      // corpus-sized keys: the 128-key default silently flips
-      // ObjectHashAggregate to sort-based, paying a map-side sort of
-      // the whole input (measured 2.7x on the pair summaries); buffers
-      // are <= k rows per group, so hash aggregation is safe
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(32, 32)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")

@@ -4,7 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -38,20 +38,11 @@ object StreamBench {
     val sfDir = args.headOption.getOrElse("/tmp/gensf01")
     val outJson = args.lift(1).getOrElse("BENCH_st12_stream.json")
     val nBatches = args.lift(2).map(_.toInt).getOrElse(20)
-    val spark = SparkSession.builder().master("local[32]")
-      // 8 shuffle partitions = 8 state-store partitions per stateful op:
-      // at this corpus size 32 would just multiply per-batch state-commit
-      // overhead (2 ops x partitions versions per micro-batch)
-      .config("spark.sql.shuffle.partitions", "8")
-      // bounded-buffer typed aggregates (TopKAgg/MinKByAgg) group by
-      // corpus-sized keys: the 128-key default silently flips
-      // ObjectHashAggregate to sort-based, paying a map-side sort of
-      // the whole input (measured 2.7x on the pair summaries); buffers
-      // are <= k rows per group, so hash aggregation is safe
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "2000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.metricsEnabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // 8 shuffle partitions = 8 state-store partitions per stateful op:
+    // at this corpus size 32 would just multiply per-batch state-commit
+    // overhead (2 ops x partitions versions per micro-batch)
+    val spark = graft.Sessions.local(32, 8)
+    spark.conf.set("spark.sql.streaming.metricsEnabled", "true")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

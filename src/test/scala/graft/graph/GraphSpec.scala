@@ -434,6 +434,24 @@ class GraphSpec extends SparkSpecBase {
     assert(math.abs(r.map(_._3).sum - 1.0) < 1e-9)
   }
 
+  test("hits: null-key edges leave hub and authority unchanged") {
+    val s = spark; import s.implicits._
+    // a null key must not pose as the rollup's grouping-total row
+    val clean = Seq((1L, 9L, 1.0), (2L, 9L, 1.0), (3L, 9L, 2.0), (9L, 1L, 1.0))
+    val nodes = Seq(1L, 2L, 3L, 9L).toDF("node")
+    def run(es: Seq[(Option[Long], Option[Long], Double)]) =
+      Graph.hits(nodes, es.toDF("src", "dst", "w"), iters = 3)
+        .orderBy("node").collect()
+        .map(x => (x.getLong(0), x.getDouble(1), x.getDouble(2))).toSeq
+    val base = run(clean.map { case (a, b, w) => (Some(a), Some(b), w) })
+    val dirty = run(clean.map { case (a, b, w) => (Some(a), Some(b), w) } ++
+      Seq((None, Some(9L), 5.0), (Some(1L), None, 5.0), (None, None, 5.0)))
+    assert(dirty.map(_._1) === base.map(_._1))
+    dirty.zip(base).foreach { case ((n, h1, a1), (_, h0, a0)) =>
+      assert(math.abs(h1 - h0) < 1e-12 && math.abs(a1 - a0) < 1e-12, s"node $n")
+    }
+  }
+
   test("hits: weighted chain favors the heavier edge's endpoint") {
     val s = spark; import s.implicits._
     // 1→2 (w 3) and 1→3 (w 1): node 2 must out-rank node 3 in authority

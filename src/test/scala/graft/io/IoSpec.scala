@@ -2,6 +2,7 @@ package graft.io
 
 import graft.SparkSpecBase
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import java.nio.file.{Files, Paths => JPaths}
 import scala.jdk.CollectionConverters._
 
@@ -247,5 +248,32 @@ class IoSpec extends SparkSpecBase {
     val viaColumns = Envelope.jumpsJsonReference(env).head.getString(0)
     assert(viaKernel === viaColumns)
     assert(expected.contains(viaKernel), "kernel render is the jumps section of the envelope")
+    // null rows: a doc with null rels is dropped and a null rel renders
+    // every field null, by both renders
+    val docT = env.schema("jumps").dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+    val relT = docT("rels").dataType.asInstanceOf[ArrayType].elementType
+    val withNulls = env.select(concat(
+      transform(col("jumps"), d => struct(docT.fieldNames.map {
+        case "rels" => concat(d.getField("rels"), array(lit(null).cast(relT))).as("rels")
+        case f => d.getField(f).as(f)
+      }: _*)),
+      array(struct(docT.fieldNames.map {
+        case "id" => lit("p2").as("id")
+        case f => lit(null).cast(docT(f).dataType).as(f)
+      }: _*))).as("jumps"))
+    val nullsKernel = withNulls
+      .select(graft.functions.JumpsJson(col("jumps")).as("jumps_json"))
+      .head.getString(0)
+    assert(nullsKernel === Envelope.jumpsJsonReference(withNulls).head.getString(0))
+    assert(nullsKernel.endsWith("\"region\":null,\"seq\":null}]}") &&
+      !nullsKernel.contains("\"p2\""), nullsKernel)
+    // a non-string id is rejected at analysis, not misread at render
+    val intId = env.select(transform(col("jumps"), d => struct(docT.fieldNames.map {
+      case "id" => lit(1).as("id")
+      case f => d.getField(f).as(f)
+    }: _*)).as("jumps"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      intId.select(graft.functions.JumpsJson(col("jumps"))))
   }
 }

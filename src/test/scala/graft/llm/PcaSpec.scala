@@ -86,8 +86,8 @@ class PcaSpec extends SparkSpecBase {
     val emb = (base ++ dups).toDF("vec_id", "embedding")
     val model = Pca.fit(emb, "embedding")
     val proj = Pca.project(emb, "vec_id", "embedding", model, k = 8)
-    val survivors = Dedup.semanticDedup(proj, "vec_id", "pc",
-        threshold = 0.95, nCells = 4)
+    val survivors = Dedup.semanticDedupPortable(proj, "vec_id", "pc",
+        threshold = 0.95, nCells = 4, rounds = 4)
       .select("vec_id").as[Long].collect().toSet
     val dropped = (base ++ dups).map(_._1).toSet -- survivors
     // every planted copy (the larger id of its pair) is dropped
